@@ -29,16 +29,20 @@ Scale notes (100 TB corpus):
   the planned radii) and becomes a distributed shuffle join beyond ~1M
   rows; the corpus side never shuffles (at cluster scale it is a
   cell-bucketed table).
-- per-round state is O(|queries|); each round plans itself with ONE tiny
-  driver collect; once <=1% of queries remain the exact flat fallback
-  replaces further rounds.
+- per-round state is O(|queries|), but each round is driver-synchronized:
+  a planning collect (the parent cover rides it on the partitioned layout),
+  the probe checkpoint, a settle count, and a checkpoint of the unsettled
+  queries only when another round follows (``cell_knn`` lists them). Once
+  <=1% of queries (or <=32) remain the exact flat fallback replaces further
+  rounds.
 """
 
 from __future__ import annotations
 
 import math
+from functools import cache
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from countrymaam_spark.functions import geo
@@ -428,7 +432,36 @@ def _fanin_level_counts(cell_stats, res: int, s: int, cnt_cache: dict):
     return tbl
 
 
-def _fanin_pairs_df(
+def _ring_shift(col, res: int):
+    """Coarse-level shift s for a ring of fine radius ``col``: sized so the
+    coarse radius lands in [2, 4] (s = floor(log2(r)) - 1, clamped to
+    [0, res])."""
+    return F.least(
+        F.greatest(
+            F.floor(F.log2(F.greatest(col, F.lit(1)).cast("double"))).cast("int") - 1,
+            F.lit(0),
+        ),
+        F.lit(res),
+    )
+
+
+def _coarse_ring(res: int, s: int, qcell=None):
+    """Each (qlat, qlon, rx, ry) row's ring enumerated at level ``res - s``:
+    the ceil-division cover of the fine (rx, ry) ring, a SUPERSET of it.
+    ``qcell`` is the query's cell at that level when the caller already has
+    the column."""
+    lv, shift = res - s, 1 << s
+    if qcell is None:
+        qcell = geo.encode_cell(F.col("qlat"), F.col("qlon"), lv)
+    return geo.ring_cells_xy(
+        qcell,
+        lv,
+        F.ceil(F.col("rx") / F.lit(shift)).cast("long"),
+        F.ceil(F.col("ry") / F.lit(shift)).cast("long"),
+    )
+
+
+def _fanin_pairs(
     qcells, is_band, s_expr, s_groups, cell_stats, res, cnt_cache=None
 ):
     """Estimated (max-per-cell, total) candidate pairs for one cell_knn round.
@@ -460,17 +493,12 @@ def _fanin_pairs_df(
         cnt_cache = {}
     ests = []
     for s, est in s_groups:
-        lv = res - s
         cnt_tbl = _fanin_level_counts(cell_stats, res, s, cnt_cache)
-        shift = 1 << s
-        qc = geo.encode_cell(F.col("qlat"), F.col("qlon"), lv)
-        rcx = F.ceil(F.col("rx") / F.lit(shift)).cast("long")
-        rcy = F.ceil(F.col("ry") / F.lit(shift)).cast("long")
         nq = (
             qcells.filter(~is_band)
             .withColumn("s", s_expr)
             .filter(F.col("s") == s)
-            .select(F.explode(geo.ring_cells_xy(qc, lv, rcx, rcy)).alias("cell"))
+            .select(F.explode(_coarse_ring(res, s)).alias("cell"))
             .groupBy("cell")
             .agg(F.count("*").alias("nq"))
         )
@@ -484,19 +512,7 @@ def _fanin_pairs_df(
     u = ests[0]
     for e in ests[1:]:
         u = u.unionByName(e)
-    return u.agg(F.max("pairs").alias("mx"), F.sum("pairs").alias("tot"))
-
-
-def _fanin_pairs(
-    qcells, is_band, s_expr, s_groups, cell_stats, res, cnt_cache=None
-):
-    """``_fanin_pairs_df`` materialized: Row(mx, tot) or None (kept as the
-    standalone entry point; cell_knn folds the DF into the round's single
-    planning collect instead)."""
-    df = _fanin_pairs_df(
-        qcells, is_band, s_expr, s_groups, cell_stats, res, cnt_cache
-    )
-    return None if df is None else df.first()
+    return u.agg(F.max("pairs").alias("mx"), F.sum("pairs").alias("tot")).first()
 
 
 def cell_knn(
@@ -546,6 +562,40 @@ def cell_knn(
     exactness never depends on the prune. Skipped when the cover reaches
     half the parent grid (a scan is cheaper than a 1000-term IN). Results
     stay bit-identical (pytest-pinned).
+
+    Driver actions. Each is a driver-synchronized Spark action; their fixed
+    cost, not executor work, bounds small batches. Once per call:
+
+    - ``plan_radius``: one eager checkpoint of the per-query starting rings
+      (the stats-less path first pins the per-cell corpus counts; an
+      under-partitioned corpus is widened and pinned before that).
+
+    Then per round:
+
+    - ``round_plan_collect``: one collect of the band/ring split, the
+      coarse ring groups and their estimated sizes. Round 0's rows also
+      give the batch size (the sum of ``nq``), so no separate count runs.
+      With ``partition_parent_res`` the parent cover rides this collect.
+    - ``round_prune_plan`` (with ``partition_parent_res``) or
+      ``round_fanin_plan`` (stats serving without it): one collect of the
+      fan-in estimate, only when the fan-in gate can fire (stats given and
+      parallelism > ``FANIN_SPREAD_FACTOR``) and the per-call upper bound
+      does not rule it out. It reads ~0 otherwise.
+    - ``round_probe_rank``: one eager checkpoint of the corpus probe's
+      top-k, with each row's settle flag (per-query window aggregates; a
+      budget's candidates-seen count is a window count before the top-k,
+      so it needs no second candidate join).
+    - ``round_settle_check``: one count of the settled queries over that
+      checkpoint.
+    - ``round_remaining_ckpt``: one eager checkpoint of the unsettled
+      queries, only when a later round will run. It reads ~0 when skipped:
+      on the last round, or when the straggler cutoff (<= max(32, 1%) of
+      the batch) sends the rest to the flat fallback.
+
+    The flat fallback runs inside the caller's action on the returned frame.
+    ``timings`` (optional dict) accumulates seconds under the phase names
+    above, plus ``prune_parents_round<r>`` (parent cover size) and
+    ``fanin_spread_round<r>`` (hot-cell pairs, when the spread engages).
     """
     import time as _time
 
@@ -599,6 +649,69 @@ def cell_knn(
         p_w = 1 << (res - partition_parent_res)
         p_grid = (2 << partition_parent_res) * (1 << partition_parent_res)
 
+    # Column builders, memoized per call: each geo expression is dozens of
+    # py4j calls (an encode ~17-30 ms, a ring ~50 ms on a 4-core box), and
+    # every round reuses the same levels. Columns are immutable, so sharing
+    # one object across rounds and plans is safe.
+    @cache
+    def qcell_at(lv: int):
+        return geo.encode_cell(F.col("qlat"), F.col("qlon"), lv)
+
+    @cache
+    def ring_at(s: int):
+        return _coarse_ring(res, s, qcell_at(res - s))
+
+    # round-invariant expressions over the per-query (qlat, qlon, rx, ry)
+    is_band = (F.col("rx") * 2 + 1) >= F.lit(nx)
+    s_expr = _ring_shift(F.greatest(F.col("rx"), F.col("ry")), res)
+    t_expr = _ring_shift(F.col("ry"), res)  # band path: shift from ry only
+    shift_col = F.when(is_band, t_expr).otherwise(s_expr)
+    # estimated exploded rows per query: the coarse ring's cells, or the
+    # band's coarse rows
+    span_x, span_y = (
+        F.ceil(F.col(c) / F.pow(F.lit(2.0), F.col("s"))) * 2 for c in ("rx", "ry")
+    )
+    est_cells_col = F.when(F.col("_band"), span_y + 2).otherwise(
+        (span_x + 1) * (span_y + 1)
+    )
+    # candidate rows carry ONLY what the haversine + top-k need; the
+    # per-query planning columns (rx, ry) rejoin from the tiny checkpointed
+    # `remaining` AFTER the top-k instead of riding every pair through the
+    # window sorts (guide §2.3: project before the exchange — measured
+    # 7.3 s -> 3.9 s on the 20M-pair metro probe)
+    out_cols = ["query_id", "qlat", "qlon", "url", "lat", "lon"]
+    if prune_src is not None:
+        m = F.greatest(F.col("rx"), F.col("ry"))
+        cover_col = F.explode(
+            geo.ring_cells_xy(
+                qcell_at(partition_parent_res),
+                partition_parent_res,
+                (F.ceil((F.col("rx") + m) / F.lit(p_w)) + 1).cast("long"),
+                (F.ceil((F.col("ry") + m) / F.lit(p_w)) + 1).cast("long"),
+            )
+        ).alias("p")
+    ok_pred = (F.col("cnt") >= k) & (
+        F.col("kth")
+        < _ring_guarantee_km(F.col("rx"), F.col("ry"), res, F.col("qlat"), nx)
+    )
+    if search_k is not None:
+        # budget semantics: accept once >= search_k candidates have been
+        # SEEN (pre-top-k count — `cnt` is capped at k). Each round's ring
+        # is a superset of the previous one (ry/rx only grow; the band
+        # switch keeps ry and covers all longitudes), so this round's
+        # candidate count IS the cumulative distinct candidates seen.
+        ok_pred = ok_pred | (F.col("seen") >= search_k)
+    # escalation. A ring query that failed only the lon bound (high
+    # latitude) switches to a latitude band with the SAME ry — its k-th
+    # distance already beats the lat-only bound; everything else widens.
+    lon_limited = _lon_bound_km(F.col("rx"), F.col("ry"), res, F.col("qlat")) < (
+        F.col("ry") * F.lit(geo.cell_deg(res) * geo.KM_PER_DEG)
+    )
+    next_ry = F.when(~is_band & lon_limited, F.col("ry")).otherwise(F.col("ry") * 3)
+    next_rx = F.when(is_band | lon_limited, F.lit(nx // 2).cast("long")).otherwise(
+        F.col("rx") * 3
+    )
+
     remaining = queries.select(
         "query_id", F.col("lat").alias("qlat"), F.col("lon").alias("qlon")
     )
@@ -610,14 +723,18 @@ def cell_knn(
         # materialized rows instead of re-running the stats joins
         .localCheckpoint(eager=True)
     )
-    n_total = n_remaining = remaining.count()
     _mark("plan_radius", _t)
+    # batch size: from round 0's planning collect (no separate count job)
+    n_total = n_remaining = None
     settled_parts: list[DataFrame] = []
     # per-CALL fan-in state: level-count plans shared across rounds, and the
     # lazily-computed (max fine cnt, total cnt) short-circuit bound — one
     # tiny job at most per serve call, only on rounds past the first
     fanin_cnt_cache: dict[int, DataFrame] = {}
     fanin_bound: list = [None]
+    # fan-in relative test `mx * target > FACTOR * tot` cannot pass when
+    # target <= FACTOR (mx <= tot): then no estimate is worth a job
+    fanin_live = stats is not None and target > FANIN_SPREAD_FACTOR
 
     def _fanin_pairs_ub(s_groups, s_nq) -> int:
         """Sound upper bound on the round's hottest-cell pair count:
@@ -655,65 +772,41 @@ def cell_knn(
         return ub
 
     for rnd in range(max_rounds):
-        if n_remaining == 0:
-            break
-        # straggler cutoff: once <=1% of queries (or <=32) remain, the exact
-        # flat fallback over that residue costs less than another full
-        # driver-synchronized round (each round is ~5 jobs + a corpus probe);
-        # results are identical either way — the fallback is exact
-        if rnd > 0 and n_remaining <= max(32, n_total // 100):
-            break
-        qcells = remaining.withColumn(
-            "qcell", geo.encode_cell(F.col("qlat"), F.col("qlon"), res)
-        )
-        is_band = (F.col("rx") * 2 + 1) >= F.lit(nx)
-        # candidate rows carry ONLY what the haversine + top-k need; the
-        # per-query planning columns (rx, ry) rejoin from the tiny
-        # checkpointed `remaining` AFTER the top-k instead of riding every
-        # pair through the window sorts (guide §2.3: project before the
-        # exchange — measured 7.3 s -> 3.9 s on the 20M-pair metro probe)
-        out_cols = ["query_id", "qlat", "qlon", "url", "lat", "lon"]
+        qcells = remaining.withColumn("qcell", qcell_at(res))
         # ONE tiny driver action plans the whole round: band-vs-ring split,
         # the ring coarse-level groups, and their estimated exploded sizes.
         # Each additional collect here is a driver-synchronized job — the
         # orchestration constant that dominates small query batches.
-        def _shift_of(col):
-            return F.least(
-                F.greatest(
-                    F.floor(F.log2(F.greatest(col, F.lit(1)).cast("double"))).cast(
-                        "int"
-                    )
-                    - 1,
-                    F.lit(0),
-                ),
-                F.lit(res),
-            )
-
-        s_expr = _shift_of(F.greatest(F.col("rx"), F.col("ry")))
-        t_expr = _shift_of(F.col("ry"))  # band path: shift from ry only
-        shift_col = F.when((F.col("rx") * 2 + 1) >= F.lit(nx), t_expr).otherwise(
-            s_expr
-        )
-        _t = _time.time()
-        plan_rows = (
-            remaining.withColumn("_band", (F.col("rx") * 2 + 1) >= F.lit(nx))
+        plan = (
+            remaining.withColumn("_band", is_band)
             .withColumn("s", shift_col)
             .groupBy("_band", "s")
             .agg(
                 F.count("*").alias("nq"),
-                F.sum(
-                    F.when(
-                        F.col("_band"),
-                        F.ceil(F.col("ry") / F.pow(F.lit(2.0), F.col("s"))) * 2 + 2,
-                    ).otherwise(
-                        (F.ceil(F.col("rx") / F.pow(F.lit(2.0), F.col("s"))) * 2 + 1)
-                        * (F.ceil(F.col("ry") / F.pow(F.lit(2.0), F.col("s"))) * 2 + 1)
-                    )
-                ).alias("est_cells"),
+                F.sum(est_cells_col).alias("est_cells"),
             )
-            .collect()
         )
+        if prune_src is not None:
+            # the parent cover (rows with a null nq) rides the same collect:
+            # <= the parent GRID rows (the directory count, O(10^2..10^4) by
+            # layout contract)
+            plan = plan.unionByName(
+                remaining.filter(~is_band).select(cover_col).distinct(),
+                allowMissingColumns=True,
+            )
+        _t = _time.time()
+        rows = plan.collect()
         _mark("round_plan_collect", _t)
+        plan_rows = [r for r in rows if r["nq"] is not None]
+        if rnd == 0:
+            n_total = n_remaining = sum(int(r["nq"]) for r in plan_rows)
+            # straggler cutoff: once <=1% of queries (or <=32) remain, the
+            # exact flat fallback over that residue costs less than another
+            # full driver-synchronized round; results are identical either
+            # way — the fallback is exact
+            cutoff = max(32, n_total // 100)
+            if n_total == 0:
+                break
         band_groups = [
             (int(r["s"]), int(r["est_cells"] or 0)) for r in plan_rows if r["_band"]
         ]
@@ -745,74 +838,7 @@ def cell_knn(
             #    exploded side moves).
             corpus_ring = pages_cells
             if prune_src is not None:
-                ppr = partition_parent_res
-                _t = _time.time()
-                m = F.greatest(F.col("rx"), F.col("ry"))
-                cover = (
-                    qcells.filter(~is_band)
-                    .select(
-                        F.explode(
-                            geo.ring_cells_xy(
-                                geo.encode_cell(
-                                    F.col("qlat"), F.col("qlon"), ppr
-                                ),
-                                ppr,
-                                (F.ceil((F.col("rx") + m) / F.lit(p_w)) + 1).cast("long"),
-                                (F.ceil((F.col("ry") + m) / F.lit(p_w)) + 1).cast("long"),
-                            )
-                        ).alias("p")
-                    )
-                    .distinct()
-                )
-                # fan-in skew gate (see _fanin_pairs_df for the measured
-                # straggler regime it exists for). Hoisted OUT of the
-                # prune-engaged branch: a hot-cell batch whose cover
-                # exceeds half the parent grid (prune skipped) still
-                # serializes the join on the task holding the hot fine
-                # cell, and the estimate never scans the corpus either
-                # way. `stats` is the CALLER's persisted cell-count state
-                # (the parameter, not the per-round result stats — those
-                # are `round_stats` below).
-                fan_df = None
-                if stats is not None:
-                    skip_est = False
-                    if rnd > 0:
-                        # short-circuit (rounds past the first): when the
-                        # round's query count x the hottest cell count cannot
-                        # clear the absolute floor, the gate provably cannot
-                        # fire — skip the estimate.
-                        skip_est = (
-                            _fanin_pairs_ub(s_groups, s_nq)
-                            <= FANIN_SPREAD_MIN_PAIRS
-                        )
-                    if not skip_est:
-                        fan_df = _fanin_pairs_df(
-                            qcells, is_band, s_expr, s_groups, stats, res,
-                            fanin_cnt_cache,
-                        )
-                # ONE bounded collect plans both the directory prune and the
-                # fan-in gate: the cover rows (<= the parent GRID, the
-                # directory count, O(10^2..10^4) by layout contract) union
-                # the 1-row fan-in aggregate — each extra collect here is a
-                # driver-synchronized job (the orchestration constant the
-                # round loop's docstring bounds).
-                merged = cover.select(
-                    F.lit(0).alias("_kind"), F.col("p"),
-                    F.lit(None).cast("long").alias("mx"),
-                    F.lit(None).cast("long").alias("tot"),
-                )
-                if fan_df is not None:
-                    merged = merged.unionByName(
-                        fan_df.select(
-                            F.lit(1).alias("_kind"),
-                            F.lit(None).cast("long").alias("p"),
-                            "mx", "tot",
-                        )
-                    )
-                rows = merged.collect()
-                probed = [r["p"] for r in rows if r["_kind"] == 0]
-                fan = next((r for r in rows if r["_kind"] == 1), None)
-                _mark("round_prune_plan", _t)
+                probed = [r["p"] for r in rows if r["nq"] is None]
                 if timings is not None:
                     timings[f"prune_parents_round{rnd}"] = len(probed)
                 if 2 * len(probed) <= p_grid:
@@ -821,29 +847,42 @@ def cell_knn(
                     ).select(
                         "url", "lat", "lon", F.col(cell_col).alias("cell")
                     )
-            elif stats is not None:
-                # UN-pruned stats serving (knn_join / knn_cell_index shape):
-                # the same clustered-file hot-cell straggler exists (sf1,
-                # mod=500: 81 s of a 95 s call in ONE task holding the
-                # 417k-row metro cell) but there is no prune collect to
-                # merge the estimate into — it is a standalone driver job,
-                # so it only runs when the cheap per-call upper bound clears
-                # FANIN_PROBE_UB_FACTOR x the spread floor. Skipping can
-                # only miss hot tasks bounded by that many pairs (~seconds
-                # of single-task work); small batches never pay the job.
+            # fan-in skew gate (see _fanin_pairs for the measured
+            # straggler regime it exists for). It runs whether or not the
+            # prune engages: a hot-cell batch whose cover exceeds half the
+            # parent grid still serializes the join on the task holding the
+            # hot fine cell. `stats` is the CALLER's persisted cell-count
+            # state (the parameter, not the per-round `round_stats` below).
+            # The estimate is a standalone driver job, gated on the cheap
+            # per-call upper bound. Pruned serving skips it only once the
+            # bound provably cannot clear the spread floor (rounds past the
+            # first). Un-pruned serving (knn_join / knn_cell_index shape;
+            # sf1, mod=500: 81 s of a 95 s call in ONE task holding the
+            # 417k-row metro cell) needs FANIN_PROBE_UB_FACTOR x the floor:
+            # skipping can only miss hot tasks bounded by that many pairs
+            # (~seconds of single-task work), so small batches never pay it.
+            fan = None
+            if fanin_live:
                 _t = _time.time()
-                fan = None
-                if (
-                    _fanin_pairs_ub(s_groups, s_nq)
-                    > FANIN_PROBE_UB_FACTOR * FANIN_SPREAD_MIN_PAIRS
-                ):
+                if prune_src is not None:
+                    want_fan = rnd == 0 or (
+                        _fanin_pairs_ub(s_groups, s_nq) > FANIN_SPREAD_MIN_PAIRS
+                    )
+                else:
+                    want_fan = (
+                        _fanin_pairs_ub(s_groups, s_nq)
+                        > FANIN_PROBE_UB_FACTOR * FANIN_SPREAD_MIN_PAIRS
+                    )
+                if want_fan:
                     fan = _fanin_pairs(
                         qcells, is_band, s_expr, s_groups, stats, res,
                         fanin_cnt_cache,
                     )
-                _mark("round_fanin_plan", _t)
-            else:
-                fan = None
+                _mark(
+                    "round_prune_plan" if prune_src is not None
+                    else "round_fanin_plan",
+                    _t,
+                )
             # relative test: one cell's pairs defeat the parallelism;
             # absolute floor: a tiny batch always looks "concentrated",
             # so require the hot task's work to be material (~seconds of
@@ -859,21 +898,17 @@ def cell_knn(
                 corpus_ring = corpus_ring.repartition(target)
             ring_q = qcells.filter(~is_band).withColumn("s", s_expr)
             for s, est_cells in s_groups:
-                lv = res - s
-                shift = 1 << s
-                sub = ring_q.filter(F.col("s") == s)
-                qc = geo.encode_cell(F.col("qlat"), F.col("qlon"), lv)
-                rcx = F.ceil(F.col("rx") / F.lit(shift)).cast("long")
-                rcy = F.ceil(F.col("ry") / F.lit(shift)).cast("long")
-                exploded = sub.select(
+                exploded = ring_q.filter(F.col("s") == s).select(
                     "query_id",
                     "qlat",
                     "qlon",
-                    F.explode(geo.ring_cells_xy(qc, lv, rcx, rcy)).alias("jcell"),
+                    F.explode(ring_at(s)).alias("jcell"),
                 )
                 exploded = gate_broadcast(exploded, est_cells)
                 join_key = (
-                    geo.cell_parent(F.col("cell"), lv, res) if s else F.col("cell")
+                    geo.cell_parent(F.col("cell"), res - s, res)
+                    if s
+                    else F.col("cell")
                 )
                 parts.append(
                     exploded.join(
@@ -889,11 +924,12 @@ def cell_knn(
             # [qy-ry, qy+ry] filter afterwards keeps results identical.
             ny = 1 << res
             band_q = qcells.filter(is_band).withColumn("t", t_expr)
+            qy = geo.cell_y(F.col("qcell"))
+            corp = pages_cells.withColumn("cy", geo.cell_y(F.col("cell")))
             for t, est in band_groups:
                 shift = 1 << t
                 ny_c = max(ny // shift, 1)
                 sub = band_q.filter(F.col("t") == t)
-                qy = geo.cell_y(F.col("qcell"))
                 lo = F.greatest(
                     F.floor((qy - F.col("ry")) / F.lit(shift)).cast("long"), F.lit(0)
                 )
@@ -910,7 +946,6 @@ def cell_knn(
                     F.explode(F.sequence(lo, hi)).alias("crow"),
                 )
                 exploded = gate_broadcast(exploded, est)
-                corp = pages_cells.withColumn("cy", geo.cell_y(F.col("cell")))
                 band_cands = (
                     corp.join(
                         exploded,
@@ -938,103 +973,78 @@ def cell_knn(
             "dist_km",
             geo.haversine_km(F.col("lat"), F.col("lon"), F.col("qlat"), F.col("qlon")),
         )
-        # ring_cells is array_distinct and urls are unique -> (query, url)
-        # pairs are already unique; skip the dedup shuffle
-        ranked = topk_per_group(
-            cands.select("query_id", "url", "dist_km"),
-            ["query_id"],
-            "dist_km",
-            "url",
-            k,
-            dedup=False,
+        # NOTE: `round_stats` is a distinct name from the `stats` parameter
+        # (the caller's persisted cell-count state) — the fan-in gate above
+        # reads the parameter inside the round loop, so shadowing it would
+        # make rounds >= 1 select the wrong columns (AnalysisException
+        # mid-serve). The per-query settle figures are window aggregates
+        # over the query partitioning the top-k already shuffles to (no
+        # extra exchange), and the settle-check columns (qlat, rx, ry)
+        # join back from the checkpointed per-query `remaining` table
+        # (n_remaining rows, gated broadcast) AFTER the top-k instead of
+        # riding the 10^7-row window input.
+        per_query = Window.partitionBy("query_id")
+        ranked_in = cands.select("query_id", "url", "dist_km")
+        if search_k is not None:
+            # candidates seen, counted before the top-k over the same
+            # query partitioning as its row_number window
+            ranked_in = ranked_in.withColumn(
+                "seen", F.count(F.lit(1)).over(per_query)
+            )
+        round_stats = (
+            # ring_cells is array_distinct and urls are unique -> (query,
+            # url) pairs are already unique; skip the dedup shuffle
+            topk_per_group(ranked_in, ["query_id"], "dist_km", "url", k, dedup=False)
+            .withColumns({
+                "cnt": F.count(F.lit(1)).over(per_query),
+                "kth": F.max("dist_km").over(per_query),
+            })
+            .join(
+                gate_broadcast(
+                    remaining.select("query_id", "qlat", "rx", "ry"), n_remaining
+                ),
+                "query_id",
+            )
+            .select("query_id", "rk", "url", "dist_km", ok_pred.alias("ok"))
         )
-        # materialize the (small: <= |remaining| * k rows) round result once;
-        # stats, output slice, and the final union all read these blocks
-        # instead of re-running the candidate join
+        # materialize the (small: <= |remaining| * k rows) round result
+        # once, settle flag included; the settle count, the output slice, the
+        # anti-join and the final union all read these blocks instead of
+        # re-running the candidate join
         _t = _time.time()
-        ranked = ranked.localCheckpoint(eager=True)
+        round_stats = round_stats.localCheckpoint(eager=True)
         _mark("round_probe_rank", _t)
-        ok_pred = (F.col("cnt") >= k) & (
-            F.col("kth")
-            < _ring_guarantee_km(F.col("rx"), F.col("ry"), res, F.col("qlat"), nx)
-        )
-        # NOTE: distinct name from the `stats` parameter (the caller's
-        # persisted cell-count state) — the fan-in gate above reads the
-        # parameter inside the round loop, so shadowing it here would make
-        # rounds >= 1 select the wrong columns (AnalysisException mid-serve).
-        # The settle-check columns (qlat, rx, ry) join back from the
-        # checkpointed per-query `remaining` table (n_remaining rows, gated
-        # broadcast) instead of being F.first-carried through the 10^7-row
-        # window above.
-        round_stats = ranked.groupBy("query_id").agg(
-            F.count("*").alias("cnt"),
-            F.max("dist_km").alias("kth"),
-        ).join(
-            gate_broadcast(
-                remaining.select("query_id", "qlat", "rx", "ry"), n_remaining
-            ),
-            "query_id",
-        )
-        if search_k is not None:
-            # budget semantics: accept once >= search_k candidates have been
-            # SEEN (pre-top-k count — `cnt` above is capped at k). Each round's
-            # ring is a superset of the previous one (ry/rx only grow; the band
-            # switch keeps ry and covers all longitudes), so this round's
-            # candidate count IS the cumulative distinct candidates seen.
-            seen = cands.groupBy("query_id").agg(F.count("*").alias("cnt_seen"))
-            round_stats = round_stats.join(seen, "query_id", "left")
-            ok_pred = ok_pred | (F.coalesce(F.col("cnt_seen"), F.lit(0)) >= search_k)
+        ok_q = round_stats.filter(F.col("ok") & (F.col("rk") == 1)).select("query_id")
         _t = _time.time()
-        round_stats = round_stats.withColumn("ok", ok_pred)
-        if search_k is not None:
-            # with a budget, round_stats depends on `seen` (derived from the
-            # full candidate join) — pin it so the two ok_q consumers below
-            # don't re-run that join. In the exact path it is a tiny groupBy
-            # over the already-checkpointed `ranked`; recomputing it inside
-            # the consumers is cheaper than an extra eager checkpoint job.
-            round_stats = round_stats.localCheckpoint(eager=True)
-        n_ok = round_stats.filter("ok").count()
+        n_ok = ok_q.count()
         _mark("round_settle_check", _t)
         if n_ok:
-            ok_q = round_stats.filter("ok").select("query_id")
-            done = ranked.join(ok_q, "query_id").select(
+            done = round_stats.filter(F.col("ok")).select(
                 "query_id", "rk", "url", F.round("dist_km", 6).alias("dist_km")
             )
             settled_parts.append(done)
             # anti-join against the SETTLED set: queries with zero candidates
-            # this round have no stats row at all and must stay in `remaining`
-            # (a semi-join against not-ok stats would silently drop them)
-            _t = _time.time()
-            remaining = remaining.join(ok_q, "query_id", "anti").localCheckpoint(
-                eager=True
-            )
-            _mark("round_remaining_ckpt", _t)
+            # this round have no ranked row at all and must stay in
+            # `remaining` (a semi-join against not-ok rows would silently
+            # drop them)
+            remaining = remaining.join(ok_q, "query_id", "anti")
             n_remaining -= n_ok
-        # escalate. A ring query that failed only the lon bound (high
-        # latitude) switches to a latitude band with the SAME ry — its k-th
-        # distance already beats the lat-only bound; everything else widens.
-        remaining = (
-            remaining.withColumn("_was_band", (F.col("rx") * 2 + 1) >= nx)
-            .withColumn(
-                "_lon_limited",
-                _lon_bound_km(F.col("rx"), F.col("ry"), res, F.col("qlat"))
-                < (F.col("ry") * F.lit(geo.cell_deg(res) * geo.KM_PER_DEG)),
-            )
-            .withColumn(
-                "ry",
-                F.when(~F.col("_was_band") & F.col("_lon_limited"), F.col("ry")).otherwise(
-                    F.col("ry") * 3
-                ),
-            )
-            .withColumn(
-                "rx",
-                F.when(
-                    F.col("_was_band") | F.col("_lon_limited"), F.lit(nx // 2).cast("long")
-                ).otherwise(F.col("rx") * 3),
-            )
-            .drop("_was_band", "_lon_limited")
-        )
+        # pin `remaining` only for a round that will read it: past the last
+        # round, or under the straggler cutoff, only the fallback reads it,
+        # once, lazily
+        more = rnd + 1 < max_rounds and n_remaining > cutoff
+        _t = _time.time()
+        if n_ok and more:
+            remaining = remaining.localCheckpoint(eager=True)
+        _mark("round_remaining_ckpt", _t)
+        if not more:
+            break
+        # both from the round's (rx, ry): withColumns evaluates them together
+        remaining = remaining.withColumns({"ry": next_ry, "rx": next_rx})
 
+    if n_remaining is None:
+        # max_rounds == 0: no planning collect ran
+        n_remaining = remaining.count()
     # exact fallback for stragglers (budget exhausted) — reference invariant:
     # budget >= corpus implies exact results
     if n_remaining > 0:

@@ -904,3 +904,220 @@ def test_cell_knn_fanin_spread_unpruned_path(spark):
         knn_mod.FANIN_SPREAD_FACTOR = old_factor
     assert got == want
     assert any(k_.startswith("fanin_spread_round") for k_ in t), sorted(t)
+
+
+# --- budget semantics pinned on both sides of search_k = k -----------------
+#
+# Stale planning state makes the round-0 rings small: the lut counts 36
+# extra pages at sites A and B (and 20 at site G) that the served corpus
+# does not hold, so the planner trusts rings that hold only 8 (A), 3 (B) and
+# 10 (G) pages. At ~80 deg north the ring's longitude bound collapses, so an
+# exact query must widen past the ring to find 'e' / 'f', while a budget
+# query stops as soon as it has seen search_k candidates.
+_BUDGET_K = 5
+_Q0 = [
+    (0, 1, "a3", 9.83998), (0, 2, "a4", 11.332405), (0, 3, "a2", 20.730595),
+    (0, 4, "a5", 22.900627), (0, 5, "a1", 33.575774),
+]
+_Q1_RING = [(1, 1, "b2", 1.918146), (1, 2, "b1", 15.331523), (1, 3, "b0", 29.381184)]
+_Q1_WIDE = _Q1_RING + [(1, 4, "a0", 5549.192711), (1, 5, "a1", 5554.018637)]
+_Q2_RING = [
+    (2, 1, "h15", 144.553604), (2, 2, "h14", 144.55589), (2, 3, "h16", 144.55589),
+    (2, 4, "h13", 144.562745), (2, 5, "h17", 144.562745),
+]
+_Q3_RING = [
+    (3, 1, "g4", 144.554176), (3, 2, "g3", 144.570886), (3, 3, "g5", 144.585738),
+    (3, 4, "g2", 144.635852), (3, 5, "g6", 144.665541),
+]
+_Q3_WIDE = [(3, 1, "f", 97.166533)] + [
+    (q, rk + 1, u, d) for q, rk, u, d in _Q3_RING[:4]
+]
+# rows recorded from the implementation that re-ran the candidate join to
+# count the candidates seen: search_k=1 accepts B's 3-page ring (fewer than k rows); search_k=k widens
+# B but accepts G's 10-page ring; search_k=3k widens G and finds 'f'; only
+# the exact path widens the h-row query and finds 'e'.
+_BUDGET_ROWS = {
+    1: _Q0 + _Q1_RING + _Q2_RING + _Q3_RING,
+    _BUDGET_K: _Q0 + _Q1_WIDE + _Q2_RING + _Q3_RING,
+    3 * _BUDGET_K: _Q0 + _Q1_WIDE + _Q2_RING + _Q3_WIDE,
+}
+
+
+@pytest.fixture(scope="module")
+def budget_fixture(spark):
+    from countrymaam_spark.functions import geo as G
+    from countrymaam_spark.operators.knn import build_cell_lut, build_cell_stats
+
+    schema = "url string, lat double, lon double"
+    served = (
+        [(f"a{i}", 10.2 + i * 0.1, 10.2 + i * 0.07) for i in range(8)]
+        + [(f"b{i}", -30.2 - i * 0.1, 40.2 + i * 0.09) for i in range(3)]
+        + [(f"h{i:02d}", 80.1, 0.1 + i * 0.04) for i in range(30)]
+        + [("e", 78.8, 5.2)]
+        + [(f"g{i}", 80.1, 60.5 + i * 0.13) for i in range(10)]
+        + [("f", 78.8, 65.5)]
+        + [(f"s{i:02d}", -60.0 + i * 7.0, -170.0 + i * 13.0) for i in range(20)]
+    )
+    unserved = (
+        [(f"xa{i}", 10.3 + (i % 6) * 0.1, 10.3 + (i // 6) * 0.1) for i in range(36)]
+        + [(f"xb{i}", -30.3 - (i % 6) * 0.1, 40.3 + (i // 6) * 0.1) for i in range(36)]
+        + [(f"xg{i}", 80.0, 60.55 + i * 0.06) for i in range(20)]
+    )
+    corpus = spark.createDataFrame(served, schema).withColumn(
+        "cell", G.encode_cell(F.col("lat"), F.col("lon"), 7)
+    )
+    stale = build_cell_lut(
+        build_cell_stats(spark.createDataFrame(served + unserved, schema), 7), 7
+    )
+    q = spark.createDataFrame(
+        [(0, 10.5, 10.5), (1, -30.4, 40.4), (2, 78.8, 0.7), (3, 78.8, 61.0)],
+        "query_id long, lat double, lon double",
+    )
+    return corpus, stale, q
+
+
+def _rows(df):
+    return sorted((r["query_id"], r["rk"], r["url"], r["dist_km"]) for r in df.collect())
+
+
+def test_cell_knn_search_k_rows_pinned_both_sides_of_k(spark, budget_fixture):
+    """search_k in {1, k, 3k} returns exactly the rows the re-join form of
+    the budget returned; without a budget the same call is exact."""
+    corpus, stale, q = budget_fixture
+    kw = dict(k=_BUDGET_K, res=7, cell_col="cell", stats=stale)
+    for search_k, want in _BUDGET_ROWS.items():
+        got = _rows(cell_knn(corpus, q, search_k=search_k, **kw))
+        assert got == sorted(want), f"search_k={search_k}"
+    exact = _rows(cell_knn(corpus, q, **kw))
+    assert exact == _rows(flat_knn(corpus, q, k=_BUDGET_K))
+    assert exact != sorted(_BUDGET_ROWS[3 * _BUDGET_K])  # 'e' lies past the ring
+
+
+def test_cell_knn_batch_size_edge_cases(spark, budget_fixture):
+    """The batch size comes from round 0's planning collect: an empty batch,
+    max_rounds=0 (no planning collect: straight to the exact flat fallback)
+    and NULL-coordinate corpus rows give the same rows as before."""
+    corpus, stale, q = budget_fixture
+    pts = corpus.select("url", "lat", "lon")
+    empty_q = spark.createDataFrame([], "query_id long, lat double, lon double")
+    for kw in ({}, dict(cell_col="cell", stats=stale), dict(max_rounds=0)):
+        empty = cell_knn(corpus, empty_q, k=5, res=7, **kw)
+        assert empty.schema.simpleString() == (
+            "struct<query_id:bigint,rk:int,url:string,dist_km:double>"
+        )
+        assert empty.collect() == []
+
+    want = _rows(flat_knn(pts, q, k=5))
+    t: dict = {}
+    assert _rows(cell_knn(pts, q, k=5, res=7, max_rounds=0, timings=t)) == want
+    assert "round_plan_collect" not in t
+
+    with_nulls = pts.unionByName(
+        spark.createDataFrame(
+            [("n0", None, None), ("n1", None, 10.5)], "url string, lat double, lon double"
+        )
+    )
+    assert _rows(cell_knn(with_nulls, q, k=5, res=7)) == want
+    assert _rows(cell_knn(with_nulls, q, k=5, res=7, max_rounds=1)) == want
+
+
+@pytest.fixture(scope="module")
+def metro_state(spark, tmp_path_factory):
+    """A parent-partitioned cell index over a dense metro cluster plus
+    scattered pages, and a 20-query metro batch (the fan-in gate's shape)."""
+    from countrymaam_spark.plans import pipeline as P
+
+    rows = [
+        (f"https://dense.example/{i}", 40.0 + (i * 37 % 1000) / 1000.0,
+         -74.0 + (i * 61 % 1000) / 1000.0)
+        for i in range(1500)
+    ] + [
+        (f"https://sparse.example/{i}", -80.0 + (i * 997 % 16000) / 100.0,
+         -179.0 + (i * 773 % 35800) / 100.0)
+        for i in range(300)
+    ]
+    corpus = spark.createDataFrame(rows, "url string, lat double, lon double")
+    out = str(tmp_path_factory.mktemp("metro_part"))
+    P.build_cell_pipeline(spark, corpus, out, res=6, partition_parent_res=3)
+    cells, lut = P.load_cell_state(spark, out)
+    metro_q = spark.createDataFrame(
+        [(i, 40.4 + i / 100.0, -73.6 - i / 100.0) for i in range(20)],
+        "query_id long, lat double, lon double",
+    )
+    return corpus, cells, lut, metro_q
+
+
+def test_cell_knn_fanin_estimate_skipped_when_gate_cannot_fire(
+    spark, metro_state, monkeypatch
+):
+    """At parallelism <= FANIN_SPREAD_FACTOR the fan-in relative test cannot
+    pass (the hot cell's pairs never exceed the total), so neither serving
+    path builds the estimate; one factor below the parallelism, it is
+    built again. Rows are identical on both sides of the switch."""
+    from countrymaam_spark.operators import knn as knn_mod
+
+    corpus, cells, lut, metro_q = metro_state
+    target = spark.sparkContext.defaultParallelism
+    assert target <= knn_mod.FANIN_SPREAD_FACTOR  # the default regime here
+    calls = []
+    real = knn_mod._fanin_pairs
+
+    def spy(*a, **kw):
+        calls.append(1)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(knn_mod, "_fanin_pairs", spy)
+    want = _key(flat_knn(corpus, metro_q, k=10).collect())
+
+    def serve(corpus_, **extra):
+        t: dict = {}
+        got = _key(
+            cell_knn(
+                corpus_, metro_q, k=10, res=6, cell_col="cell", stats=lut,
+                timings=t, **extra,
+            ).collect()
+        )
+        return got, t
+
+    # pruned (parent-partitioned) and un-pruned stats serving
+    for got, t in (serve(cells, partition_parent_res=3), serve(cells.drop("parent"))):
+        assert got == want
+        assert not calls, "fan-in estimate built although the gate cannot fire"
+        assert not any(k_.startswith("fanin_spread_round") for k_ in t)
+
+    # the other side: one factor below the parallelism the estimate runs
+    # (its own collect); the production floor still keeps the small batch
+    # from spreading
+    monkeypatch.setattr(knn_mod, "FANIN_SPREAD_FACTOR", target - 1)
+    got, t = serve(cells, partition_parent_res=3)
+    assert got == want
+    assert calls
+    assert not any(k_.startswith("fanin_spread_round") for k_ in t)
+
+
+# Spark jobs of one cell_knn call plus its materialization on the metro
+# fixture (one round; AQE submits each shuffle stage as its own job):
+# plan_radius checkpoint 3, round-plan collect with the parent cover merged
+# in 3, probe checkpoint with the settle flags 4, settle count 2, output 1.
+# The unsettled queries are not pinned (no later round runs). A re-added
+# driver-synchronized action fails this bound.
+CELL_KNN_METRO_JOBS = 13
+
+
+def test_cell_knn_job_count_bound(spark, metro_state):
+    corpus, cells, lut, metro_q = metro_state
+    sc = spark.sparkContext
+    for rnd in range(2):  # the first call warms plans and file listings
+        group = f"cell_knn_job_count_{rnd}"
+        sc.setJobGroup(group, "cell_knn job-count regression")
+        try:
+            out = cell_knn(
+                cells, metro_q, k=10, res=6, cell_col="cell", stats=lut,
+                partition_parent_res=3,
+            )
+            out.write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= CELL_KNN_METRO_JOBS, n_jobs
